@@ -493,7 +493,7 @@ def _dedup_text_semantic_adaptive(
 
 def _dedup_semantic_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-list tail of the semantic near-dup family: adaptive
-    hyperplane pairs → min-label components → surviving vec_ids (the
+    hyperplane pairs → connected components → surviving vec_ids (the
     apply symmetry every other dedup modality has)."""
     from engine.spark import analytics as A
 
@@ -1137,8 +1137,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_ngram_jaccard": A.dedup_ngram_jaccard,
         # pairs -> connected components -> keep/drop decision -> applied
         "dedup_cluster_assign": A.dedup_cluster_assign,
-        # O(log n) star algorithm over the same pairs -> same oracle
-        "dedup_cluster_assign_star": A.dedup_cluster_assign_star,
         "dedup_apply": A.dedup_apply,
         # quality-aware survivor selection: cluster keeper = longest
         # member (ties -> min id), not min id — the canonical-
@@ -1211,7 +1209,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # sign_dims=6 entry above exists for its fully-static oracle)
         "dedup_text_semantic_adaptive": _dedup_text_semantic_adaptive,
         # keep-list tail of the semantic family (the apply symmetry
-        # every other dedup modality has): pairs -> min-label
+        # every other dedup modality has): pairs -> connected
         # components -> surviving vec_ids
         "dedup_semantic_apply": _dedup_semantic_apply,
         # model-based quality filtering: ridge-distilled linear scorer
@@ -1408,8 +1406,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skill_match_tiers", "text_preview", "candidate_rank",
         "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
         "dedup_ngram_jaccard", "dedup_lsh_verified", "dedup_apply",
-        "dedup_cluster_assign", "dedup_cluster_assign_star",
-        "dedup_incremental", "order_rollup",
+        "dedup_cluster_assign", "dedup_incremental", "order_rollup",
         "stratified_sample", "decontaminate", "repetition_metrics",
         "pii_scrub", "vocab_top_k", "corpus_stats", "c4_clean",
         "line_dedup", "internal_ngram_overlap", "lm_unigram_score",
@@ -1814,6 +1811,25 @@ def _lsh_verified_oracle() -> str:
     """
 
 
+def _closure_ctes(pairs: str, a: str = "doc_a", b: str = "doc_b") -> str:
+    """Recursive-CTE transitive closure over the id pairs (columns
+    ``a``, ``b``) of CTE ``pairs`` — the DuckDB twin of
+    analytics.dedup_clusters that every keep-list oracle shares.
+    ``reach(node, r)`` holds each id reachable from node, so
+    ``comp(node, root)`` labels every paired id with its component
+    root = min reachable id (the keeper). Needs ``WITH RECURSIVE``."""
+    return f"""edges AS (
+            SELECT {a} AS a, {b} AS b FROM {pairs}
+            UNION SELECT {b}, {a} FROM {pairs}),
+        nodes AS (SELECT DISTINCT a AS node FROM edges),
+        reach(node, r) AS (
+            SELECT node, node FROM nodes
+            UNION
+            SELECT ed.a, reach.r FROM edges ed JOIN reach ON ed.b = reach.node
+        ),
+        comp AS (SELECT node, min(r) AS root FROM reach GROUP BY node)"""
+
+
 def _apply_lsh_drop_ctes(src: str = "documents") -> str:
     """Recursive-CTE transitive closure over the LSH-verified pairs +
     the exact-group drops — the shared tail of dedup_apply_lsh and
@@ -1821,18 +1837,8 @@ def _apply_lsh_drop_ctes(src: str = "documents") -> str:
     Yields a ``survivors`` CTE of surviving doc ids."""
     return f"""
         {_lsh_verified_ctes(0.5, src)},
-        edges AS (
-            SELECT doc_a AS a, doc_b AS b FROM vpairs
-            UNION SELECT doc_b, doc_a FROM vpairs),
-        nodes AS (SELECT DISTINCT a AS node FROM edges),
-        reach(node, r) AS (
-            SELECT node, node FROM nodes
-            UNION
-            SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
-        ),
-        near_drop AS (
-            SELECT node AS doc_id FROM reach GROUP BY node
-            HAVING node != min(r)),
+        {_closure_ctes("vpairs")},
+        near_drop AS (SELECT node AS doc_id FROM comp WHERE node != root),
         exact_drop AS (
             SELECT doc_id FROM (
                 SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS keep_id
@@ -1949,18 +1955,8 @@ def _conv_apply_drop_ctes() -> str:
             SELECT conv_id AS doc_id, coalesce(cleaned_text, '') AS text
             FROM pt),
         {_lsh_verified_ctes(0.5, "conv_src")},
-        edges AS (
-            SELECT doc_a AS a, doc_b AS b FROM vpairs
-            UNION SELECT doc_b, doc_a FROM vpairs),
-        enodes AS (SELECT DISTINCT a AS node FROM edges),
-        reach(node, r) AS (
-            SELECT node, node FROM enodes
-            UNION
-            SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
-        ),
-        near_drop AS (
-            SELECT node AS conv_id FROM reach GROUP BY node
-            HAVING node != min(r))"""
+        {_closure_ctes("vpairs")},
+        near_drop AS (SELECT node AS conv_id FROM comp WHERE node != root)"""
 
 
 def _planted_role_ctes() -> str:
@@ -2258,18 +2254,8 @@ def _dedup_incremental_oracle() -> str:
             JOIN sizes na ON na.doc_id = i.doc_a
             JOIN sizes nb ON nb.doc_id = i.doc_b
             WHERE round(icount / (na.n + nb.n - icount), 6) >= 0.5
-        ), edges AS (
-            SELECT doc_a AS a, doc_b AS b FROM vpairs
-            UNION SELECT doc_b, doc_a FROM vpairs
-        ), nodes AS (SELECT DISTINCT a AS node FROM edges),
-        reach(node, r) AS (
-            SELECT node, node FROM nodes
-            UNION
-            SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
-        ), near_drop AS (
-            SELECT node AS doc_id FROM reach GROUP BY node
-            HAVING node != min(r)
-        )
+        ), {_closure_ctes("vpairs")},
+        near_drop AS (SELECT node AS doc_id FROM comp WHERE node != root)
         SELECT doc_id FROM s2
         WHERE doc_id NOT IN (SELECT doc_id FROM near_drop)
     """
@@ -2720,25 +2706,14 @@ def _dedup_semantic_apply_oracle(
 ) -> str:
     """DuckDB twin of the semantic keep-list: adaptive hyperplane pairs
     (shared CTE body) → recursive-closure components (root = min
-    reachable id, provably the same labels as min-label propagation) →
-    surviving vec_ids."""
+    reachable id) → surviving vec_ids."""
     path = _per_turn_path(sf_dir) + "_hv"
     return f"""
         WITH RECURSIVE {_rp_pairs_ctes(dim, sf_dir)},
         spairs AS (
             SELECT vec_a, vec_b FROM hsims WHERE cosine >= {threshold}),
-        sedges AS (
-            SELECT vec_a AS a, vec_b AS b FROM spairs
-            UNION SELECT vec_b, vec_a FROM spairs),
-        snodes AS (SELECT DISTINCT a AS node FROM sedges),
-        sreach(node, r) AS (
-            SELECT node, node FROM snodes
-            UNION
-            SELECT e.a, sreach.r FROM sedges e JOIN sreach ON e.b = sreach.node
-        ),
-        sdrop AS (
-            SELECT node AS vec_id FROM sreach GROUP BY node
-            HAVING node != min(r))
+        {_closure_ctes("spairs", "vec_a", "vec_b")},
+        sdrop AS (SELECT node AS vec_id FROM comp WHERE node != root)
         SELECT vec_id FROM read_parquet('{path}/*.parquet')
         WHERE vec_id NOT IN (SELECT vec_id FROM sdrop)
     """
@@ -2780,12 +2755,11 @@ def _quality_classifier_oracle(
 
 def _dedup_report_oracle() -> str:
     """DuckDB twin of analytics.dedup_report: component stats from the
-    recursive-closure reach table (component root = min reachable id —
-    identical to min-label propagation), exact surplus from a distinct
-    hash count, survivors from the shared keep-list tail."""
+    recursive-closure components (root = min reachable id), exact
+    surplus from a distinct hash count, survivors from the shared
+    keep-list tail."""
     return f"""
         WITH RECURSIVE {_apply_lsh_drop_ctes()},
-        comp AS (SELECT node, min(r) AS root FROM reach GROUP BY node),
         csizes AS (SELECT root, count(*) AS sz FROM comp GROUP BY root),
         stats AS (
             SELECT CAST(count(*) AS BIGINT) AS n_components,
@@ -4003,20 +3977,10 @@ def oracle_sql() -> dict[str, str]:
                       WHEN 'und' THEN 0.25 ELSE 0.0 END
         """,
         # corpus minus exact-group and near-dup-component non-keepers
-        "dedup_apply": """
+        "dedup_apply": f"""
             WITH RECURSIVE j AS (__PAIRS__),
-            edges AS (
-                SELECT doc_a AS a, doc_b AS b FROM j
-                UNION SELECT doc_b, doc_a FROM j),
-            nodes AS (SELECT DISTINCT a AS node FROM edges),
-            reach(node, r) AS (
-                SELECT node, node FROM nodes
-                UNION
-                SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
-            ),
-            near_drop AS (
-                SELECT node AS doc_id FROM reach GROUP BY node
-                HAVING node != min(r)),
+            {_closure_ctes("j")},
+            near_drop AS (SELECT node AS doc_id FROM comp WHERE node != root),
             exact_drop AS (
                 SELECT doc_id FROM (
                     SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS keep_id
@@ -4050,26 +4014,15 @@ def oracle_sql() -> dict[str, str]:
         """,
         # keep-best variant: cluster keeper = longest member (ties ->
         # min id); kept_over = cluster-mates the survivor displaced
-        "dedup_keep_best": """
+        "dedup_keep_best": f"""
             WITH RECURSIVE j AS (__PAIRS__),
-            edges AS (
-                SELECT doc_a AS a, doc_b AS b FROM j
-                UNION SELECT doc_b, doc_a FROM j),
-            nodes AS (SELECT DISTINCT a AS node FROM edges),
-            reach(node, r) AS (
-                SELECT node, node FROM nodes
-                UNION
-                SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
-            ),
-            clusters AS (
-                SELECT node AS doc_id, min(r) AS cluster_id
-                FROM reach GROUP BY node),
+            {_closure_ctes("j")},
             ranked AS (
-                SELECT c.doc_id,
-                       row_number() OVER (PARTITION BY c.cluster_id
-                           ORDER BY length(d.text) DESC, c.doc_id) AS rk,
-                       count(*) OVER (PARTITION BY c.cluster_id) AS csz
-                FROM clusters c JOIN documents d USING (doc_id)),
+                SELECT c.node AS doc_id,
+                       row_number() OVER (PARTITION BY c.root
+                           ORDER BY length(d.text) DESC, c.node) AS rk,
+                       count(*) OVER (PARTITION BY c.root) AS csz
+                FROM comp c JOIN documents d ON d.doc_id = c.node),
             near_drop AS (SELECT doc_id FROM ranked WHERE rk > 1),
             exact_drop AS (
                 SELECT doc_id FROM (
@@ -4087,37 +4040,12 @@ def oracle_sql() -> dict[str, str]:
         """.replace("__PAIRS__", _NGRAM_JACCARD_SQL),
         # connected components over the jaccard pairs: recursive-CTE
         # transitive closure labels each node with the min reachable id
-        "dedup_cluster_assign": """
+        "dedup_cluster_assign": f"""
             WITH RECURSIVE j AS (__PAIRS__),
-            edges AS (
-                SELECT doc_a AS a, doc_b AS b FROM j
-                UNION SELECT doc_b, doc_a FROM j),
-            nodes AS (SELECT DISTINCT a AS node FROM edges),
-            reach(node, r) AS (
-                SELECT node, node FROM nodes
-                UNION
-                SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
-            )
-            SELECT node AS doc_id, min(r) AS cluster_id,
-                   (node = min(r)) AS is_keeper
-            FROM reach GROUP BY node
-        """.replace("__PAIRS__", _NGRAM_JACCARD_SQL),
-        # the star algorithm must produce identical components — same
-        # closure twin, full oracle row for the O(log n) variant
-        "dedup_cluster_assign_star": """
-            WITH RECURSIVE j AS (__PAIRS__),
-            edges AS (
-                SELECT doc_a AS a, doc_b AS b FROM j
-                UNION SELECT doc_b, doc_a FROM j),
-            nodes AS (SELECT DISTINCT a AS node FROM edges),
-            reach(node, r) AS (
-                SELECT node, node FROM nodes
-                UNION
-                SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
-            )
-            SELECT node AS doc_id, min(r) AS cluster_id,
-                   (node = min(r)) AS is_keeper
-            FROM reach GROUP BY node
+            {_closure_ctes("j")}
+            SELECT node AS doc_id, root AS cluster_id,
+                   (node = root) AS is_keeper
+            FROM comp
         """.replace("__PAIRS__", _NGRAM_JACCARD_SQL),
         "career_progression": _CAREER_PROGRESSION_SQL,
         "candidate_fit_parse": _FIT_PARSE_SQL,
@@ -4179,18 +4107,8 @@ def oracle_sql() -> dict[str, str]:
         "dedup_apply_embeddings": f"""
             WITH RECURSIVE {_EMB_PAIR_CTES},
             p AS (SELECT vec_a, vec_b FROM sims WHERE cosine >= 0.35),
-            edges AS (
-                SELECT vec_a AS a, vec_b AS b FROM p
-                UNION SELECT vec_b, vec_a FROM p),
-            nodes AS (SELECT DISTINCT a AS node FROM edges),
-            reach(node, r) AS (
-                SELECT node, node FROM nodes
-                UNION
-                SELECT e2.a, reach.r FROM edges e2 JOIN reach ON e2.b = reach.node
-            ),
-            dropped AS (
-                SELECT node AS vec_id FROM reach GROUP BY node
-                HAVING node != min(r))
+            {_closure_ctes("p", "vec_a", "vec_b")},
+            dropped AS (SELECT node AS vec_id FROM comp WHERE node != root)
             SELECT vec_id FROM embeddings
             WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
         """,

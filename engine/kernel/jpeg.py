@@ -489,6 +489,13 @@ def _clamp(v: float) -> int:
     return 0 if v < 0 else 255 if v > 255 else int(v)
 
 
+def _need(body: bytes, n: int, name: str) -> None:
+    """Reject a marker segment whose body is shorter than the ``n``
+    bytes of fields about to be read from it."""
+    if len(body) < n:
+        raise ValueError(f"truncated {name} body")
+
+
 def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     """Decode baseline JPEG to ``(width, height, channels, pixels)``
     with pixels as row-major 8-bit bytes (grayscale or RGB).
@@ -557,6 +564,7 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
                 )
                 p += 17 + n
         elif marker == 0xC0:  # SOF0
+            _need(body, 6, "SOF0")
             precision = body[0]
             if precision != 8:
                 raise ValueError(f"unsupported sample precision {precision}")
@@ -564,6 +572,7 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
             nf = body[5]
             if nf not in (1, 3):
                 raise ValueError(f"unsupported component count {nf}")
+            _need(body, 6 + 3 * nf, "SOF0")
             comps = []
             for i in range(nf):
                 cid = body[6 + 3 * i]
@@ -571,11 +580,14 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
                 comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * i]))
             frame = (w_, h_, comps)
         elif marker == 0xDD:  # DRI
+            _need(body, 2, "DRI")
             (restart_interval,) = struct.unpack(">H", body[:2])
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("SOS before SOF0")
+            _need(body, 1, "SOS")
             ns = body[0]
+            _need(body, 1 + 2 * ns, "SOS")
             scan = []
             for i in range(ns):
                 cs = body[1 + 2 * i]

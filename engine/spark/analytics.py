@@ -28,6 +28,7 @@ LSH_BANDS = 8  # 8 bands x 4 rows
 NGRAM_N = 3
 SIMHASH_BITS = 60  # portable-hash width (15 hex chars of md5)
 LSH_MAX_BUCKET_DOCS = 64  # band-bucket skew guard (see dedup_minhash_lsh)
+DEDUP_CLUSTER_MAX_ROUNDS = 30  # star rounds grow as O(log n); see dedup_clusters
 
 
 def _phash60(col) -> "F.Column":
@@ -424,98 +425,30 @@ def dedup_clusters(
     pairs: "DataFrame",
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iterations: int = 20,
 ) -> "DataFrame":
     """Connected components over near-duplicate PAIRS → cluster ids:
     the step that turns any of the pair-producing dedup operators into
     an actual keep/drop decision (cluster id = min doc id in the
-    component; keeper = the id itself).
+    component; keeper = the id itself). Every dedup keep-list runs
+    through this one closure.
 
-    Iterative min-label propagation: each round every node takes the
-    minimum label among itself and its neighbors; converges in
-    O(component diameter) rounds — near-dup components are shallow
-    (dups of a common source), so a handful of join+groupBy rounds.
-    Each round is one shuffle on the node id; lineage is cut with
-    localCheckpoint so the plan doesn't grow with iterations (the
-    standard Spark iterative-algorithm pattern). Fixpoint is detected
-    with a count action per round — driver-side control flow over
-    distributed rounds, not a driver-side algorithm."""
-    e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    edges = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # never return partially-propagated labels: a duplicate chain
-        # with diameter > max_iterations would silently yield wrong
-        # keep/drop decisions at 10^12-doc scale
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iterations} rounds "
-            f"({changed} labels still changing); raise max_iterations"
-        )
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        (F.col("node") == F.col("label")).alias("is_keeper"),
-    )
-
-
-def dedup_clusters_star(
-    pairs: "DataFrame",
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_rounds: int = 30,
-) -> "DataFrame":
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the O(log n)-round alternative to dedup_clusters'
-    min-label propagation, whose round count is the component
-    DIAMETER. Near-dup components are usually shallow (dups of a
-    common source), so min-label's one-action-per-round loop is the
-    default; a 10^12-doc corpus with adversarial chain-shaped
-    components (A≈B≈C≈… pairwise-similar chains) needs this variant:
-    a 50-deep chain converges in ~5 alternating rounds here vs 50+
-    label rounds.
+    Alternating LARGE-STAR / SMALL-STAR (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14): O(log n) rounds
+    whatever the component shape, so adversarial chain-shaped
+    components (A≈B≈C≈… pairwise-similar chains) at 10^12-doc scale
+    need no diameter-sized round budget — a 50-deep chain converges in
+    7 rounds, the last one confirming the fixpoint.
 
     Edges are kept oriented large→small (u > v). Large-star connects
     every larger neighbor of u to min(Γ(u) ∪ {u}); small-star
     connects u and its smaller neighbors to their minimum. The
     fixpoint is one star per component rooted at the component min —
-    read labels straight off the edges. Same output contract as
-    dedup_clusters: (doc_id, cluster_id, is_keeper), raises on
-    non-convergence instead of returning partial labels."""
+    read labels straight off the edges. Each round's edge set is cut
+    with localCheckpoint so the plan doesn't grow with rounds, and the
+    fixpoint is detected with a count action per round — driver-side
+    control flow over distributed rounds. Emits (doc_id, cluster_id,
+    is_keeper); raises instead of returning partial labels when
+    DEDUP_CLUSTER_MAX_ROUNDS is exhausted."""
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
         F.col("u") != F.col("v")
     )
@@ -524,7 +457,7 @@ def dedup_clusters_star(
         .distinct()
         .localCheckpoint()
     )
-    for _ in range(max_rounds):
+    for _ in range(DEDUP_CLUSTER_MAX_ROUNDS):
         sym = edges.unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -561,8 +494,10 @@ def dedup_clusters_star(
         if changed == 0:
             break
     else:
+        # never return partially-merged labels: they would silently
+        # yield wrong keep/drop decisions
         raise RuntimeError(
-            f"dedup_clusters_star did not converge in {max_rounds} rounds"
+            f"dedup_clusters did not converge in {DEDUP_CLUSTER_MAX_ROUNDS} rounds"
         )
     labels = edges.select(
         F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
@@ -586,37 +521,10 @@ def dedup_cluster_assign(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     return dedup_clusters(dedup_ngram_jaccard(spark, sf_dir))
 
 
-def dedup_cluster_assign_star(spark: "SparkSession", sf_dir: str) -> "DataFrame":
-    """Same pairs, star algorithm: components must be identical to the
-    min-label path, so this shares dedup_cluster_assign's DuckDB
-    oracle — the star variant gets its own full correctness row, not
-    just an equivalence pytest."""
-    return dedup_clusters_star(dedup_ngram_jaccard(spark, sf_dir))
-
-
-def _apply_drops(
-    spark: "SparkSession",
-    sf_dir: str,
-    pairs: "DataFrame",
-    clusterer: str = "label",
-) -> "DataFrame":
-    return _apply_drops_docs(_docs(spark, sf_dir), pairs, clusterer)
-
-
-def _apply_drops_docs(
-    corpus: "DataFrame",
-    pairs: "DataFrame",
-    clusterer: str = "label",
-) -> "DataFrame":
-    """Shared tail of the dedup pipeline: the corpus with duplicates
-    DROPPED, given a near-duplicate pair source. Non-keepers come from
-    exact content groups (every id but the group minimum) and from
-    near-dup components (cluster non-keepers over ``pairs``); the
-    corpus anti-joins the union. Emits the surviving doc ids — at
-    scale this is the keep-list write that every downstream training
-    job reads."""
-    docs = corpus.select("doc_id")
-    exact = (
+def _exact_drops(corpus: "DataFrame") -> "DataFrame":
+    """Doc ids dropped as exact duplicates: every member of an md5
+    content group but the group minimum."""
+    return (
         corpus
         .groupBy(F.md5("text").alias("h"))
         .agg(F.min("doc_id").alias("keep_id"), F.collect_list("doc_id").alias("ids"))
@@ -624,21 +532,26 @@ def _apply_drops_docs(
         .filter(F.col("doc_id") != F.col("keep_id"))
         .select("doc_id")
     )
-    cluster_fn = dedup_clusters_star if clusterer == "star" else dedup_clusters
-    near = (
-        cluster_fn(pairs)
-        .filter(~F.col("is_keeper"))
-        .select("doc_id")
-    )
-    drop = exact.unionByName(near).distinct()
-    return docs.join(drop, "doc_id", "left_anti")
+
+
+def _apply_drops_docs(corpus: "DataFrame", pairs: "DataFrame") -> "DataFrame":
+    """Shared tail of the dedup pipeline: the corpus with duplicates
+    DROPPED, given a near-duplicate pair source. Non-keepers come from
+    exact content groups (every id but the group minimum) and from
+    near-dup components (cluster non-keepers over ``pairs``); the
+    corpus anti-joins the union. Emits the surviving doc ids — at
+    scale this is the keep-list write that every downstream training
+    job reads."""
+    near = dedup_clusters(pairs).filter(~F.col("is_keeper")).select("doc_id")
+    drop = _exact_drops(corpus).unionByName(near).distinct()
+    return corpus.select("doc_id").join(drop, "doc_id", "left_anti")
 
 
 def dedup_apply(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     """Surviving corpus after exact + near-dup drops, with the
     SQL-expressible bounded-id jaccard pair source (oracle path; see
     dedup_apply_lsh for the production pair source)."""
-    return _apply_drops(spark, sf_dir, dedup_ngram_jaccard(spark, sf_dir))
+    return _apply_drops_docs(_docs(spark, sf_dir), dedup_ngram_jaccard(spark, sf_dir))
 
 
 def dedup_keep_best(spark: "SparkSession", sf_dir: str) -> "DataFrame":
@@ -696,17 +609,7 @@ def dedup_keep_best(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     near_drop = members.join(
         best.select("doc_id"), "doc_id", "left_anti"
     ).select("doc_id")
-    exact_drop = (
-        docs.groupBy(F.md5("text").alias("h"))
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.collect_list("doc_id").alias("ids"),
-        )
-        .select(F.explode("ids").alias("doc_id"), "keep_id")
-        .filter(F.col("doc_id") != F.col("keep_id"))
-        .select("doc_id")
-    )
-    drop = near_drop.unionByName(exact_drop).distinct()
+    drop = near_drop.unionByName(_exact_drops(docs)).distinct()
     return (
         docs.select("doc_id")
         .join(drop, "doc_id", "left_anti")
@@ -810,7 +713,6 @@ def dedup_apply_lsh(
     sf_dir: str,
     min_jaccard: float = 0.5,
     max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
-    clusterer: str = "label",
 ) -> "DataFrame":
     """THE production dedup composition a 100 TB corpus runs first:
     MinHash+LSH band-collision candidates → exact n-gram Jaccard
@@ -821,15 +723,12 @@ def dedup_apply_lsh(
     key-local shuffle; nothing is quadratic in the corpus
     (_bucketed_pairs hub-star guard bounds even pathological
     boilerplate buckets). Fully DuckDB-oracled via the portable md5
-    hashes. ``clusterer``: "label" (min-label, rounds ≈ diameter —
-    right for real shallow near-dup components) or "star" (alternating
-    large/small-star, O(log n) rounds — right when chain-shaped
-    components are possible); both produce identical components
-    (equivalence-tested)."""
+    hashes. The closure is the O(log n)-round large/small-star
+    dedup_clusters, so chain-shaped components need no round budget."""
     pairs = lsh_verified_pairs(
         spark, sf_dir, min_jaccard=min_jaccard, max_bucket_docs=max_bucket_docs
     )
-    return _apply_drops(spark, sf_dir, pairs, clusterer=clusterer)
+    return _apply_drops_docs(_docs(spark, sf_dir), pairs)
 
 
 # ---------------------------------------------------- incremental dedup
@@ -867,7 +766,6 @@ def dedup_incremental_batch(
     min_jaccard: float = 0.5,
     est_threshold: float = 0.5,
     max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
-    clusterer: str = "label",
 ) -> "DataFrame":
     """Surviving doc ids of a NEW batch deduped against a persisted
     corpus state AND within itself — the operation an ongoing training
@@ -927,8 +825,7 @@ def dedup_incremental_batch(
         "doc_a", "doc_b"
     )
     pairs = _verify_pairs(cands, s2, min_jaccard)
-    cluster_fn = dedup_clusters_star if clusterer == "star" else dedup_clusters
-    near = cluster_fn(pairs).filter(~F.col("is_keeper")).select("doc_id")
+    near = dedup_clusters(pairs).filter(~F.col("is_keeper")).select("doc_id")
     return s2.select("doc_id").join(near, "doc_id", "left_anti")
 
 
@@ -1507,7 +1404,6 @@ def dedup_apply_embeddings(
     threshold: float = 0.35,
     sign_dims: int | None = None,
     probes: int = 2,
-    clusterer: str = "label",
 ) -> "DataFrame":
     """The vector-side keep-list: embedding-cosine near-dup pairs →
     connected components → anti-join, emitting the surviving vec_ids
@@ -1520,9 +1416,8 @@ def dedup_apply_embeddings(
     pairs = dedup_embedding_cosine(
         spark, sf_dir, threshold=threshold, sign_dims=sign_dims, probes=probes
     ).select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
-    cluster_fn = dedup_clusters_star if clusterer == "star" else dedup_clusters
     drop = (
-        cluster_fn(pairs)
+        dedup_clusters(pairs)
         .filter(~F.col("is_keeper"))
         .select(F.col("doc_id").alias("vec_id"))
     )
@@ -3042,7 +2937,7 @@ def dedup_report(
             ),
         )
     )
-    surv = _apply_drops(spark, sf_dir, pairs).agg(
+    surv = _apply_drops_docs(docs, pairs).agg(
         F.count("*").cast("long").alias("n_kept")
     )
     return (
@@ -3576,7 +3471,7 @@ def dedup_semantic_apply(
     """The keep-list tail of the SEMANTIC near-dup family — completing
     the apply symmetry every other dedup modality has (dedup_apply_lsh,
     dedup_apply_embeddings, dedup_apply_conversations): adaptive
-    random-hyperplane pairs → min-label connected components →
+    random-hyperplane pairs → connected components (dedup_clusters) →
     anti-join, emitting the surviving vec_ids. Zero-vector documents
     never enter the artifact, so they survive by construction (they
     pair with nothing — same contract as the zero-norm sentinel rows
@@ -3584,7 +3479,7 @@ def dedup_semantic_apply(
 
     Scale shape inherited whole: the pair stage is rp_pair_sims
     (bounded buckets, id-only collision shuffle), the component stage
-    is the O(log n)-round min-label propagation over PAIRS (edge count
+    is the O(log n)-round large/small-star closure over PAIRS (edge count
     ∝ verified near-dups, not corpus), and the final anti-join is
     id-only. Nothing text- or vector-sized shuffles past the artifact
     scan."""

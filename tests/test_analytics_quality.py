@@ -294,7 +294,7 @@ def test_ivf_multiprobe_improves_recall(spark):
 
 
 def test_dedup_clusters_chain_merge(spark):
-    """Label propagation must merge transitive chains into one
+    """Connected components must merge transitive chains into one
     component labeled by its minimum id, handle disjoint components,
     and mark exactly one keeper per cluster."""
     from engine.spark.analytics import dedup_clusters
@@ -320,13 +320,12 @@ def test_dedup_clusters_chain_merge(spark):
 def test_dedup_clusters_deep_chain_converges(spark):
     from engine.spark.analytics import dedup_clusters
 
-    # a 30-node path graph: diameter 29 > default iterations would fail
-    # a naive 1-round approach; label propagation needs ~diameter
-    # rounds, so give it enough
+    # a 31-node path graph (diameter 30) converges within the fixed
+    # round cap: no caller-supplied round budget
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "doc_a long, doc_b long"
     )
-    got = dedup_clusters(pairs, max_iterations=40).collect()
+    got = dedup_clusters(pairs).collect()
     assert {r.cluster_id for r in got} == {0}
     assert sum(r.is_keeper for r in got) == 1
 
@@ -464,50 +463,63 @@ def test_persisted_codebook_reproduces_inline_training(spark, tmp_path):
     assert served == inline and served
 
 
-def test_star_clusters_match_min_label(spark):
-    """Alternating large/small-star components == min-label propagation
-    on a 50-deep path (diameter stress: star needs O(log n) rounds,
-    label needs 50), a merged-chain graph, and seeded random graphs."""
-    from engine.spark.analytics import dedup_clusters, dedup_clusters_star
+def _union_find_clusters(edges):
+    """Pure-Python reference components: (doc_id, cluster_id,
+    is_keeper) with cluster_id = min id of the component."""
+    parent = {}
 
-    def both(edges, label_iters=80):
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        # union by min root: every root is its set's minimum id
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n), n == find(n)) for n in list(parent)}
+
+
+def test_dedup_clusters_match_union_find(spark):
+    """dedup_clusters == a union-find reference on a 50-deep path
+    (diameter stress), a merged-chain graph, and a seeded random
+    graph."""
+    from engine.spark.analytics import dedup_clusters
+
+    def check(edges):
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        a = {
+        got = {
             (r.doc_id, r.cluster_id, r.is_keeper)
-            for r in dedup_clusters(df, max_iterations=label_iters).collect()
+            for r in dedup_clusters(df).collect()
         }
-        b = {
-            (r.doc_id, r.cluster_id, r.is_keeper)
-            for r in dedup_clusters_star(df).collect()
-        }
-        assert a == b, (sorted(a - b)[:5], sorted(b - a)[:5])
-        return a
+        want = _union_find_clusters(edges)
+        assert got == want, (sorted(got - want)[:5], sorted(want - got)[:5])
+        return got
 
-    # 12-deep path: star converges in ~4 alternating rounds vs 12
-    # label rounds (the 30-deep min-label case is covered separately by
-    # test_dedup_clusters_deep_chain_converges)
-    got = both([(i, i + 1) for i in range(12)], label_iters=20)
-    assert {c for _, c, _ in got} == {0}
+    path = check([(i, i + 1) for i in range(50)])
+    assert len(path) == 51 and {c for _, c, _ in path} == {0}
 
-    both([(1, 2), (2, 3), (10, 11), (3, 10), (20, 21)])  # chain merge
-
-    import random
+    check([(1, 2), (2, 3), (10, 11), (3, 10), (20, 21)])  # chain merge
 
     rng = random.Random(5)
     nodes = list(range(60))
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(40)]
-    both([(a, b) for a, b in edges if a != b])
+    check([(a, b) for a, b in edges if a != b])
 
 
-def test_dedup_apply_lsh_star_matches_label(spark, boilerplate_dir):
-    from engine.spark.analytics import dedup_apply_lsh
+def test_dedup_clusters_raises_when_round_cap_exhausted(spark, monkeypatch):
+    """A component that has not converged when the round cap runs out
+    raises instead of returning partially-merged labels."""
+    from engine.spark import analytics
 
-    a = sorted(r.doc_id for r in dedup_apply_lsh(spark, boilerplate_dir).collect())
-    b = sorted(
-        r.doc_id
-        for r in dedup_apply_lsh(spark, boilerplate_dir, clusterer="star").collect()
+    monkeypatch.setattr(analytics, "DEDUP_CLUSTER_MAX_ROUNDS", 1)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(10)], "doc_a long, doc_b long"
     )
-    assert a == b
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        analytics.dedup_clusters(pairs)
 
 
 def test_corpus_prepare_filters_dedups_and_packs(spark, boilerplate_dir):
@@ -1505,12 +1517,12 @@ def test_source_keywords_planted(spark):
     assert table[("A", "alpha")][1] > table[("A", "shared")][1]
 
 
-def test_dedup_job_decontaminate_and_manifest_modes(spark, tmp_path):
-    """jobs/dedup_job.py in-process: the round-4 modes. decontaminate
-    drops docs hit by EITHER arm against a real eval dir (a fuzzily
-    edited leak AND a verbatim leak both drop; a clean doc survives);
-    manifest writes a seeded epoch manifest whose re-run is idempotent
-    and whose re-seed permutes."""
+def test_dedup_job_decontaminate_and_manifest_modes(spark, tmp_path, boilerplate_dir):
+    """jobs/dedup_job.py in-process. decontaminate drops docs hit by
+    EITHER arm against a real eval dir (a fuzzily edited leak AND a
+    verbatim leak both drop; a clean doc survives); manifest writes a
+    seeded epoch manifest whose re-run is idempotent and whose re-seed
+    permutes; keep-list writes the dedup_apply_lsh survivors."""
     import json
     import sys
 
@@ -1582,6 +1594,26 @@ def test_dedup_job_decontaminate_and_manifest_modes(spark, tmp_path):
             spark.read.text(f"{out2}/metrics_manifest_{seed}").collect()[0][0]
         )
         assert rec["output"].endswith(f"manifest_{seed}")
+
+    from engine.spark.analytics import dedup_apply_lsh
+
+    out3 = str(tmp_path / "out3")
+    assert dedup_job.main(
+        ["--input", boilerplate_dir, "--output", out3, "--mode", "keep-list"]
+    ) == 0
+    kept = sorted(
+        r.doc_id for r in spark.read.parquet(f"{out3}/keep_list").collect()
+    )
+    assert kept == sorted(
+        r.doc_id for r in dedup_apply_lsh(spark, boilerplate_dir).collect()
+    )
+    rec = json.loads(spark.read.text(f"{out3}/metrics_keep-list").collect()[0][0])
+    assert rec["rows_out"] == len(kept) < rec["rows_in"]
+    # one closure: the old clusterer switch is gone from the CLI
+    with pytest.raises(SystemExit):
+        dedup_job.main(
+            ["--input", boilerplate_dir, "--output", out3, "--clusterer", "star"]
+        )
 
 
 def test_dedup_report_planted(spark, planted_dir):
