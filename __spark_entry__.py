@@ -1155,7 +1155,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash": lambda s, d: A.dedup_simhash(s, d, band_bits=10),
         # the production composition: LSH candidates -> exact jaccard
         # verified on candidates only -> components -> anti-join
-        "dedup_lsh_verified": A.lsh_verified_pairs,
+        "dedup_lsh_verified": lambda s, d: A.lsh_verified_pairs(A._docs(s, d)),
         "dedup_apply_lsh": A.dedup_apply_lsh,
         # the full training-corpus pipeline in one call: quality
         # filter -> dedup -> pack (loader-ready bins)
@@ -1662,9 +1662,11 @@ def _shingle_ctes(src: str = "documents", where: str = "") -> str:
         )"""
 
 
-def _bucket_pair_ctes(src: str, payload: str, max_bucket_docs: int) -> str:
+def _bucket_pair_ctes(src: str, payload: str) -> str:
     """DuckDB twin of analytics._bucketed_pairs: bucket self-join with
     the hub-star guard for oversized (boilerplate-skew) buckets."""
+    from engine.spark.analytics import LSH_MAX_BUCKET_DOCS
+
     return f"""
         sized AS (
             SELECT doc_id, {payload}, bucket,
@@ -1676,12 +1678,29 @@ def _bucket_pair_ctes(src: str, payload: str, max_bucket_docs: int) -> str:
                    x.{payload} AS pa, y.{payload} AS pb
             FROM sized x JOIN sized y
               ON x.bucket = y.bucket AND x.doc_id < y.doc_id
-            WHERE x.bsize <= {max_bucket_docs}
+            WHERE x.bsize <= {LSH_MAX_BUCKET_DOCS}
             UNION ALL
             SELECT h.doc_id, m.doc_id, h.{payload}, m.{payload}
             FROM sized h JOIN sized m ON h.bucket = m.bucket
-            WHERE h.bsize > {max_bucket_docs}
+            WHERE h.bsize > {LSH_MAX_BUCKET_DOCS}
               AND h.doc_id = h.hub AND m.doc_id <> m.hub
+        )"""
+
+
+def _eval_band_ctes(eval_mod: int) -> str:
+    """DuckDB twin of analytics.eval_band_table over the _sig_band_ctes
+    ``bands`` CTE: eval-side (doc_id % eval_mod = 0) band rows as
+    ``eb(eval_id, esig, bucket)``, buckets of more than
+    LSH_MAX_BUCKET_DOCS eval docs dropped."""
+    from engine.spark.analytics import LSH_MAX_BUCKET_DOCS
+
+    return f"""
+        eb AS (
+            SELECT eval_id, esig, bucket FROM (
+                SELECT doc_id AS eval_id, sig AS esig, bucket,
+                       count(*) OVER (PARTITION BY bucket) AS bsize
+                FROM bands WHERE doc_id % {eval_mod} = 0)
+            WHERE bsize <= {LSH_MAX_BUCKET_DOCS}
         )"""
 
 
@@ -1720,10 +1739,10 @@ def _sig_band_ctes(src: str = "documents") -> str:
 
 
 def _minhash_ctes(src: str = "documents") -> str:
-    from engine.spark.analytics import LSH_MAX_BUCKET_DOCS, MINHASH_K
+    from engine.spark.analytics import MINHASH_K
 
     return f"""
-        {_sig_band_ctes(src)}, {_bucket_pair_ctes("bands", "sig", LSH_MAX_BUCKET_DOCS)}, est AS (
+        {_sig_band_ctes(src)}, {_bucket_pair_ctes("bands", "sig")}, est AS (
             SELECT DISTINCT doc_a, doc_b,
                    round(len(list_filter(range(1, {MINHASH_K + 1}),
                                          i -> pa[i] = pb[i])) / {MINHASH_K},
@@ -1743,7 +1762,7 @@ def _simhash_oracle(band_bits: int = 10) -> str:
     """DuckDB twin of analytics.dedup_simhash: 60-bit SimHash bit-vote
     over the portable per-shingle hash, multi-band buckets (band index
     high, hash slice low), hub-star skew guard, full-hamming verify."""
-    from engine.spark.analytics import LSH_MAX_BUCKET_DOCS, SIMHASH_BITS
+    from engine.spark.analytics import SIMHASH_BITS
 
     n_bands = max(1, SIMHASH_BITS // band_bits)
     mask = (1 << band_bits) - 1
@@ -1770,7 +1789,7 @@ def _simhash_oracle(band_bits: int = 10) -> str:
         ), b AS (
             SELECT doc_id, simhash, unnest([{band_exprs}]) AS bucket
             FROM simh
-        ), {_bucket_pair_ctes("b", "simhash", LSH_MAX_BUCKET_DOCS)}
+        ), {_bucket_pair_ctes("b", "simhash")}
         SELECT DISTINCT doc_a, doc_b,
                CAST(bit_count(xor(pa, pb)) AS INT) AS hamming
         FROM bpairs
@@ -2211,7 +2230,7 @@ def _dedup_incremental_oracle() -> str:
     identical whichever side they're computed on — then filtered by
     parity per stage, exactly mirroring the Spark plan's state vs batch
     tables."""
-    from engine.spark.analytics import LSH_MAX_BUCKET_DOCS, MINHASH_K
+    from engine.spark.analytics import MINHASH_K
 
     est = (
         f"round(len(list_filter(range(1, {MINHASH_K + 1}), "
@@ -2238,7 +2257,7 @@ def _dedup_incremental_oracle() -> str:
         ), bands2 AS (
             SELECT doc_id, sig, bucket FROM bands
             WHERE doc_id IN (SELECT doc_id FROM s2)
-        ), {_bucket_pair_ctes("bands2", "sig", LSH_MAX_BUCKET_DOCS)}, cand AS (
+        ), {_bucket_pair_ctes("bands2", "sig")}, cand AS (
             SELECT DISTINCT doc_a, doc_b FROM bpairs
         ), sizes AS (
             SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
@@ -2442,21 +2461,15 @@ def _decontaminate_fuzzy_oracle(threshold: float = 0.5, eval_mod: int = 5) -> st
     the full table (signatures are per-doc, so banding before or after
     the corpus/eval split is identical), eval-side bucket-size cap, a
     bipartite bucket join, signature-agreement Jaccard, anti-join."""
-    from engine.spark.analytics import LSH_MAX_BUCKET_DOCS, MINHASH_K
+    from engine.spark.analytics import MINHASH_K
 
     return f"""
-        WITH {_sig_band_ctes()},
-        eb AS (
-            SELECT bucket, sig AS esig,
-                   count(*) OVER (PARTITION BY bucket) AS bsize
-            FROM bands WHERE doc_id % {eval_mod} = 0
-        ),
-        ebc AS (SELECT bucket, esig FROM eb WHERE bsize <= {LSH_MAX_BUCKET_DOCS}),
+        WITH {_sig_band_ctes()}, {_eval_band_ctes(eval_mod)},
         cb AS (SELECT doc_id, sig, bucket FROM bands
                WHERE doc_id % {eval_mod} != 0),
         hits AS (
             SELECT DISTINCT c.doc_id
-            FROM cb c JOIN ebc e ON c.bucket = e.bucket
+            FROM cb c JOIN eb e ON c.bucket = e.bucket
             WHERE round(len(list_filter(range(1, {MINHASH_K + 1}),
                                         i -> c.sig[i] = e.esig[i])) / {MINHASH_K},
                         6) >= {threshold}
@@ -2787,11 +2800,11 @@ def _contamination_report_oracle(
     pair chain (renamed w13/g13 to avoid colliding with the shingle
     CTEs) and the bipartite fuzzy pair chain, both counted per eval
     doc; only eval docs with ≥1 hit survive."""
-    from engine.spark.analytics import LSH_MAX_BUCKET_DOCS, MINHASH_K
+    from engine.spark.analytics import MINHASH_K
 
     gram = " || ' ' || ".join(f"w[i+{j}]" for j in range(n))
     return f"""
-        WITH {_sig_band_ctes()},
+        WITH {_sig_band_ctes()}, {_eval_band_ctes(eval_mod)},
         w13 AS (
             SELECT doc_id,
                    string_split(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' ') AS w
@@ -2810,15 +2823,9 @@ def _contamination_report_oracle(
             WHERE c.doc_id % {eval_mod} != 0),
         exc AS (SELECT eval_id, CAST(count(*) AS BIGINT) AS n_exact
                 FROM expairs GROUP BY eval_id),
-        eb AS (
-            SELECT doc_id AS eval_id, sig AS esig, bucket,
-                   count(*) OVER (PARTITION BY bucket) AS bsize
-            FROM bands WHERE doc_id % {eval_mod} = 0),
-        ebc AS (SELECT eval_id, esig, bucket FROM eb
-                WHERE bsize <= {LSH_MAX_BUCKET_DOCS}),
         fzpairs AS (
             SELECT DISTINCT e.eval_id, c.doc_id
-            FROM bands c JOIN ebc e ON c.bucket = e.bucket
+            FROM bands c JOIN eb e ON c.bucket = e.bucket
             WHERE c.doc_id % {eval_mod} != 0
               AND round(len(list_filter(range(1, {MINHASH_K + 1}),
                                         i -> c.sig[i] = e.esig[i])) / {MINHASH_K},

@@ -100,20 +100,21 @@ def _shingles(docs: "DataFrame", distinct: bool = True) -> "DataFrame":
     return out.distinct() if distinct else out
 
 
-def _bucketed_pairs(
-    b: "DataFrame", payload: str, max_bucket_docs: int
-) -> "DataFrame":
-    """Self-join within ``bucket`` with an oversized-bucket guard — the
-    LSH/SimHash skew defense. Boilerplate-heavy corpora put thousands of
-    near-identical docs in ONE bucket; a naive bucket self-join is then
-    O(bucket²) pairs and a single reducer owns all of them (AQE can
-    split the shuffle partition, but not the quadratic pair count
-    itself). Buckets with ≤ ``max_bucket_docs`` members pair all-pairs;
-    larger buckets emit only a STAR around the bucket's min doc id —
-    O(bucket) pairs that preserve the connectivity the downstream
-    connected-components stage needs (every member links to the hub, so
-    the cluster is identical whenever members truly match the hub —
-    exactly the boilerplate case that creates oversized buckets).
+def _bucketed_pairs(b: "DataFrame", payload: str) -> "DataFrame":
+    """THE bucket self-join of every hash-banded family (MinHash bands,
+    SimHash and image-ahash bit blocks), with an oversized-bucket guard
+    — the LSH skew defense. Boilerplate-heavy corpora (or blank images,
+    which all hash to 0) put thousands of near-identical rows in ONE
+    bucket; a naive bucket self-join is then O(bucket²) pairs and a
+    single reducer owns all of them (AQE can split the shuffle
+    partition, but not the quadratic pair count itself). Buckets with
+    ≤ LSH_MAX_BUCKET_DOCS members pair all-pairs; larger buckets emit
+    only a STAR around the bucket's min doc id — O(bucket) pairs that
+    preserve the connectivity the downstream connected-components stage
+    needs (every member links to the hub, so the cluster is identical
+    whenever members truly match the hub — exactly the boilerplate case
+    that creates oversized buckets). The cap is a module constant read
+    at call time, not a parameter.
     Returns (doc_a, doc_b, pa, pb) with doc_a < doc_b and the payload
     column from each side."""
     w = Window.partitionBy("bucket")
@@ -122,7 +123,7 @@ def _bucketed_pairs(
         .withColumn("bsize", F.count("*").over(w))
         .withColumn("hub", F.min("doc_id").over(w))
     )
-    small = sized.filter(F.col("bsize") <= max_bucket_docs).select(
+    small = sized.filter(F.col("bsize") <= LSH_MAX_BUCKET_DOCS).select(
         "doc_id", "bucket", payload
     )
     x, y = small.alias("x"), small.alias("y")
@@ -134,7 +135,7 @@ def _bucketed_pairs(
         F.col(f"x.{payload}").alias("pa"),
         F.col(f"y.{payload}").alias("pb"),
     )
-    big = sized.filter(F.col("bsize") > max_bucket_docs)
+    big = sized.filter(F.col("bsize") > LSH_MAX_BUCKET_DOCS)
     hubs = big.filter(F.col("doc_id") == F.col("hub")).select(
         "bucket", F.col("doc_id").alias("doc_a"), F.col(payload).alias("pa")
     )
@@ -143,6 +144,51 @@ def _bucketed_pairs(
     )
     pbig = members.join(hubs, "bucket").select("doc_a", "doc_b", "pa", "pb")
     return psmall.unionByName(pbig)
+
+
+def _hamming_pairs(
+    hashes: "DataFrame", bits: int, band_bits: int, max_hamming: int
+) -> "DataFrame":
+    """Banded near-dup pairs over a ``bits``-wide bit hash — the one
+    Hamming scorer behind dedup_simhash (60-bit SimHash) and
+    multimodal.image_dedup_near (64-bit ahash). ``hashes`` is
+    (doc_id, hash); the hash splits into floor(bits/band_bits) disjoint
+    bit-blocks and a pair is a candidate when ANY block matches exactly
+    (pigeonhole: hamming ≤ bands−1 always collides somewhere), then the
+    FULL popcount(xor) verifies every candidate — zero false positives.
+    Bucket key = band index in the high bits, the band's hash slice
+    low, so bands live in disjoint keyspaces within one explode and the
+    one guarded self-join (_bucketed_pairs). Emits
+    (doc_a, doc_b, hamming) with doc_a < doc_b."""
+    mask = (1 << band_bits) - 1
+    banded = hashes.select(
+        "doc_id",
+        "hash",
+        F.explode(
+            F.array(
+                *[
+                    (
+                        F.lit(b << band_bits)
+                        + F.shiftrightunsigned("hash", b * band_bits).bitwiseAND(
+                            F.lit(mask)
+                        )
+                    ).cast("long")
+                    for b in range(max(1, bits // band_bits))
+                ]
+            )
+        ).alias("bucket"),
+    )
+    pairs = (
+        _bucketed_pairs(banded, "hash")
+        # a pair can collide in several bands -> keep one row
+        .dropDuplicates(["doc_a", "doc_b"])
+        .select(
+            "doc_a",
+            "doc_b",
+            F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))).alias("hamming"),
+        )
+    )
+    return pairs.filter(F.col("hamming") <= max_hamming)
 
 
 def _minhash_bands(docs: "DataFrame") -> "DataFrame":
@@ -194,18 +240,16 @@ def _minhash_bands(docs: "DataFrame") -> "DataFrame":
 
 
 def dedup_minhash_lsh(
-    spark: "SparkSession",
-    sf_dir: str,
-    jaccard_threshold: float = 0.5,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
+    spark: "SparkSession", sf_dir: str, jaccard_threshold: float = 0.5
 ) -> "DataFrame":
     """MinHash(32) + LSH(8 bands x 4) candidate pairs, LSH-bucket join
     only (no cross product), verified by estimated signature agreement.
-    Oversized band buckets (boilerplate skew) emit hub-star pairs
-    instead of all-pairs (_bucketed_pairs). Fully DuckDB-oracled via
-    the portable md5 double-hash (_minhash_bands)."""
-    return _minhash_est_pairs(
-        _docs(spark, sf_dir), jaccard_threshold, max_bucket_docs
+    Candidates come from the one banded core (_bucketed_pairs), so a
+    band bucket over the fixed LSH_MAX_BUCKET_DOCS cap (boilerplate
+    skew) emits hub-star pairs instead of all-pairs. Fully
+    DuckDB-oracled via the portable md5 double-hash (_minhash_bands)."""
+    return _est_pairs_from_bands(
+        _minhash_bands(_docs(spark, sf_dir)), jaccard_threshold
     )
 
 
@@ -219,18 +263,10 @@ def _est_jaccard(pa, pb) -> "F.Column":
     )
 
 
-def _minhash_est_pairs(
-    docs: "DataFrame", jaccard_threshold: float, max_bucket_docs: int
-) -> "DataFrame":
-    return _est_pairs_from_bands(
-        _minhash_bands(docs), jaccard_threshold, max_bucket_docs
-    )
-
-
 def _est_pairs_from_bands(
-    bands: "DataFrame", jaccard_threshold: float, max_bucket_docs: int
+    bands: "DataFrame", jaccard_threshold: float
 ) -> "DataFrame":
-    pairs = _bucketed_pairs(bands, "sig", max_bucket_docs)
+    pairs = _bucketed_pairs(bands, "sig")
     est = (
         pairs.select(
             "doc_a", "doc_b", _est_jaccard("pa", "pb").alias("est_jaccard")
@@ -242,14 +278,31 @@ def _est_pairs_from_bands(
     return est.filter(F.col("est_jaccard") >= jaccard_threshold)
 
 
+def _band_hits(
+    bands: "DataFrame", ref: "DataFrame", threshold: float, *cols: str
+) -> "DataFrame":
+    """The one band-hit join: MinHash band rows (doc_id, sig, bucket)
+    matched against a reference band table (bucket, esig, …) on
+    ``bucket``, kept when the signature-agreement estimate clears
+    ``threshold``, projected to the distinct ``cols``. Serves fuzzy
+    decontamination, the contamination audit and incremental dedup's
+    history arm; the caller decides whether ``ref`` broadcasts."""
+    return (
+        bands.join(ref, "bucket")
+        .filter(_est_jaccard(F.col("sig"), F.col("esig")) >= threshold)
+        .select(*cols)
+        .distinct()
+    )
+
+
 def adaptive_simhash_band_bits(n_docs: int, lo: int = 10, hi: int = 20) -> int:
     """Band width that scales the per-band bucket keyspace with the
     corpus (≥ 2n keys per band, same contract as adaptive_sign_dims),
     clamped to [10, 20]. Wider bands at scale mean fewer bands
     (floor(60/bits)) and a weaker pigeonhole guarantee — the classic
     SimHash trade (Manku et al., WWW'07 run 8B docs with comparable
-    block sizes at hamming ≤ 3); the max_bucket_docs hub-star guard
-    bounds whatever skew remains."""
+    block sizes at hamming ≤ 3); the fixed LSH_MAX_BUCKET_DOCS hub-star
+    guard bounds whatever skew remains."""
     import math
 
     want = math.ceil(math.log2(max(n_docs, 2))) + 1
@@ -261,18 +314,15 @@ def dedup_simhash(
     sf_dir: str,
     max_hamming: int = 6,
     band_bits: int | None = None,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
 ) -> "DataFrame":
-    """60-bit SimHash near-dup pairs, multi-band bucketed: the hash is
-    split into floor(60/band_bits) disjoint bit-blocks and a pair is a
-    candidate when ANY block matches exactly (pigeonhole: hamming ≤
-    bands−1 is guaranteed to collide somewhere; higher distances
-    collide with the s-curve probability), then the FULL hamming
-    distance verifies every candidate — zero false positives.
-    band_bits=None derives the width from the corpus size
-    (adaptive_simhash_band_bits: ≥ 2n keys per band); the oracled
-    entry pins band_bits=10 (6 bands, guarantee ≤ 5). Oversized
-    buckets emit hub-star pairs (_bucketed_pairs skew guard).
+    """60-bit SimHash near-dup pairs through the one Hamming scorer
+    (_hamming_pairs): floor(60/band_bits) disjoint bit-blocks propose
+    candidates (higher distances than bands−1 collide with the s-curve
+    probability) and the full hamming distance verifies them — zero
+    false positives. band_bits=None derives the width from the corpus
+    size (adaptive_simhash_band_bits: ≥ 2n keys per band); the oracled
+    entry pins band_bits=10 (6 bands, guarantee ≤ 5). Buckets over the
+    fixed LSH_MAX_BUCKET_DOCS cap emit hub-star pairs.
 
     Bit-vote is fused into one higher-order expression over the per-doc
     hash array (collect_list -> transform/aggregate SQL lambdas): one
@@ -283,7 +333,6 @@ def dedup_simhash(
     docs = _docs(spark, sf_dir)
     if band_bits is None:
         band_bits = adaptive_simhash_band_bits(docs.count())
-    n_bands = max(1, SIMHASH_BITS // band_bits)
     sh = _shingles(docs).withColumn("h", _phash60(F.col("shingle")))
     hs = sh.groupBy("doc_id").agg(F.collect_list("h").alias("hs"))
     simhash = hs.select(
@@ -297,39 +346,9 @@ def dedup_simhash(
               sequence(0, {SIMHASH_BITS - 1}),
               (s, bit) -> IF(s > 0, shiftleft(1L, bit), 0L)),
             0L, (a, x) -> a + x)
-        """).alias("simhash"),
+        """).alias("hash"),
     )
-    # bucket key = band index in the high bits, band's hash slice low —
-    # bands live in disjoint keyspaces within one explode/self-join
-    mask = (1 << band_bits) - 1
-    banded = simhash.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    (
-                        F.lit(b << band_bits)
-                        + F.shiftrightunsigned("simhash", b * band_bits).bitwiseAND(
-                            F.lit(mask)
-                        )
-                    ).cast("long")
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bucket"),
-    )
-    pairs = (
-        _bucketed_pairs(banded, "simhash", max_bucket_docs)
-        # a pair can collide in several bands -> keep one row
-        .dropDuplicates(["doc_a", "doc_b"])
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))).alias("hamming"),
-        )
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
+    return _hamming_pairs(simhash, SIMHASH_BITS, band_bits, max_hamming)
 
 
 def dedup_ngram_jaccard(
@@ -361,34 +380,19 @@ def dedup_ngram_jaccard(
 
 
 def lsh_verified_pairs(
-    spark: "SparkSession",
-    sf_dir: str,
-    min_jaccard: float = 0.5,
-    est_floor: float = 0.0,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
+    docs: "DataFrame", min_jaccard: float = 0.5
 ) -> "DataFrame":
-    """The production pair source: LSH band-collision candidates
-    verified with EXACT n-gram Jaccard computed ONLY on those pairs —
-    never all-pairs (dedup_ngram_jaccard's bounded-id all-pairs join is
-    the oracle-friendly verify stage, not a scale path). Intersections
-    come from joining the candidate pairs back to the shingle sets:
-    pair ⋈ shingles(doc_a) on doc_a, then ⋈ shingles on (doc_b,
-    shingle) — work is proportional to candidate-pair shingles, not to
-    corpus². ``est_floor`` optionally pre-filters candidates by the
-    signature estimate (0.0 = pure band collision, max recall; raise it
-    at scale to shed verify cost)."""
-    return _lsh_verified_pairs_docs(
-        _docs(spark, sf_dir), min_jaccard, est_floor, max_bucket_docs
-    )
-
-
-def _lsh_verified_pairs_docs(
-    docs: "DataFrame",
-    min_jaccard: float = 0.5,
-    est_floor: float = 0.0,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
-) -> "DataFrame":
-    cands = _minhash_est_pairs(docs, est_floor, max_bucket_docs).select(
+    """The production pair source over a (doc_id, text) DataFrame:
+    LSH band-collision candidates (the one banded core, hub-star guard
+    included) verified with EXACT n-gram Jaccard computed ONLY on those
+    pairs — never all-pairs (dedup_ngram_jaccard's bounded-id
+    all-pairs join is the oracle-friendly verify stage, not a scale
+    path). Intersections come from joining the candidate pairs back to
+    the shingle sets: pair ⋈ shingles(doc_a) on doc_a, then ⋈ shingles
+    on (doc_b, shingle) — work is proportional to candidate-pair
+    shingles, not to corpus². Every band collision is a candidate
+    (max recall); the exact verify decides."""
+    cands = _est_pairs_from_bands(_minhash_bands(docs), 0.0).select(
         "doc_a", "doc_b"
     )
     return _verify_pairs(cands, docs, min_jaccard)
@@ -709,10 +713,7 @@ def token_budget_select(
 
 
 def dedup_apply_lsh(
-    spark: "SparkSession",
-    sf_dir: str,
-    min_jaccard: float = 0.5,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
+    spark: "SparkSession", sf_dir: str, min_jaccard: float = 0.5
 ) -> "DataFrame":
     """THE production dedup composition a 100 TB corpus runs first:
     MinHash+LSH band-collision candidates → exact n-gram Jaccard
@@ -720,15 +721,13 @@ def dedup_apply_lsh(
     all-pairs) → connected components (dedup_clusters) → anti-join of
     exact-group and component non-keepers. One call, corpus in →
     deduplicated keep-list out. Every stage is a bucket-local or
-    key-local shuffle; nothing is quadratic in the corpus
-    (_bucketed_pairs hub-star guard bounds even pathological
+    key-local shuffle; nothing is quadratic in the corpus (the one
+    banded core's fixed-cap hub-star guard bounds even pathological
     boilerplate buckets). Fully DuckDB-oracled via the portable md5
     hashes. The closure is the O(log n)-round large/small-star
     dedup_clusters, so chain-shaped components need no round budget."""
-    pairs = lsh_verified_pairs(
-        spark, sf_dir, min_jaccard=min_jaccard, max_bucket_docs=max_bucket_docs
-    )
-    return _apply_drops_docs(_docs(spark, sf_dir), pairs)
+    docs = _docs(spark, sf_dir)
+    return _apply_drops_docs(docs, lsh_verified_pairs(docs, min_jaccard))
 
 
 # ---------------------------------------------------- incremental dedup
@@ -765,7 +764,6 @@ def dedup_incremental_batch(
     state_bands: "DataFrame",
     min_jaccard: float = 0.5,
     est_threshold: float = 0.5,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
 ) -> "DataFrame":
     """Surviving doc ids of a NEW batch deduped against a persisted
     corpus state AND within itself — the operation an ongoing training
@@ -810,18 +808,15 @@ def dedup_incremental_batch(
         .localCheckpoint()
     )
     bands = _minhash_bands(s1).localCheckpoint()
-    hits_old = (
-        bands.alias("n")
-        .join(state_bands.alias("o"), "bucket")
-        .filter(
-            _est_jaccard(F.col("n.sig"), F.col("o.sig")) >= est_threshold
-        )
-        .select(F.col("n.doc_id").alias("doc_id"))
-        .distinct()
+    hits_old = _band_hits(
+        bands,
+        state_bands.select("bucket", F.col("sig").alias("esig")),
+        est_threshold,
+        "doc_id",
     )
     s2 = s1.join(hits_old, "doc_id", "left_anti").localCheckpoint()
     bands2 = bands.join(s2.select("doc_id"), "doc_id")
-    cands = _est_pairs_from_bands(bands2, 0.0, max_bucket_docs).select(
+    cands = _est_pairs_from_bands(bands2, 0.0).select(
         "doc_a", "doc_b"
     )
     pairs = _verify_pairs(cands, s2, min_jaccard)
@@ -834,7 +829,6 @@ def dedup_incremental(
     sf_dir: str,
     min_jaccard: float = 0.5,
     est_threshold: float = 0.5,
-    max_bucket_docs: int = LSH_MAX_BUCKET_DOCS,
 ) -> "DataFrame":
     """Driver-query form of dedup_incremental_batch: even doc ids play
     the already-ingested corpus (state computed in-plan — identical
@@ -850,7 +844,6 @@ def dedup_incremental(
         _minhash_bands(old),
         min_jaccard=min_jaccard,
         est_threshold=est_threshold,
-        max_bucket_docs=max_bucket_docs,
     )
 
 
@@ -2208,7 +2201,7 @@ def corpus_prepare(
     filtered = quality_filter_docs(
         _docs(spark, sf_dir), min_words, max_digit_ratio
     ).persist()
-    pairs = _lsh_verified_pairs_docs(filtered, min_jaccard=min_jaccard)
+    pairs = lsh_verified_pairs(filtered, min_jaccard)
     survivors = _apply_drops_docs(filtered, pairs)
     kept = filtered.join(survivors.select("doc_id"), "doc_id")
     return _pack_docs(kept, seq_len, n_shards)
@@ -2570,10 +2563,8 @@ def corpus_diff(
 
 def decontaminate_fuzzy_batch(
     corpus: "DataFrame",
-    eval_docs: "DataFrame",
+    eval_bands: "DataFrame",
     jaccard_threshold: float = 0.5,
-    max_eval_bucket: int = LSH_MAX_BUCKET_DOCS,
-    eval_bands: "DataFrame | None" = None,
 ) -> "DataFrame":
     """Paraphrase-robust eval-set DECONTAMINATION — drop every training
     document whose MinHash-estimated Jaccard against ANY held-out eval
@@ -2584,55 +2575,46 @@ def decontaminate_fuzzy_batch(
     dedup_minhash_lsh, pointed across the corpus/eval split instead of
     within the corpus).
 
+    ``eval_bands`` is the capped eval band table from
+    :func:`eval_band_table` — built once per eval set, so the streaming
+    caller caches it for the stream's lifetime instead of re-signing
+    the eval set per microbatch.
+
     Scale shape: the eval side is tiny next to a 100 TB corpus, so its
     banded signatures BROADCAST and the bucket match is a map-side
-    broadcast join — the corpus pays exactly the MinHash signature
-    aggregation it already pays for dedup (one groupBy over hashed
-    shingles with map-side partial min-agg; shingles NOT deduplicated,
-    min is duplicate-insensitive) and is never shuffled afterwards.
-    Candidate pairs exist only within a shared band bucket, and each is
-    bounded by |eval ∩ bucket| ≤ ``max_eval_bucket`` (oversized eval
-    buckets are degenerate boilerplate; capping them bounds the
-    per-corpus-row fanout — connectivity does not matter here because
-    any single surviving hit already drops the doc).
-
-    ``eval_bands`` short-circuits the eval-side derivation with a
-    pre-built capped band table (``bucket``, ``esig``) from
-    :func:`eval_band_table` — the streaming caller builds and caches it
-    once for the stream's lifetime instead of re-signing the eval set
-    per microbatch."""
-    eb = (
-        eval_bands
-        if eval_bands is not None
-        else eval_band_table(eval_docs, max_eval_bucket)
-    )
-    cb = _minhash_bands(corpus)
-    hits = (
-        cb.join(F.broadcast(eb), "bucket")
-        .select(
-            "doc_id", _est_jaccard(F.col("sig"), F.col("esig")).alias("est")
-        )
-        .filter(F.col("est") >= jaccard_threshold)
-        .select("doc_id")
-        .distinct()
+    broadcast join (_band_hits) — the corpus pays exactly the MinHash
+    signature aggregation it already pays for dedup (one groupBy over
+    hashed shingles with map-side partial min-agg; shingles NOT
+    deduplicated, min is duplicate-insensitive) and is never shuffled
+    afterwards. Candidate pairs exist only within a shared band bucket,
+    and each is bounded by the fixed eval-side cap of
+    LSH_MAX_BUCKET_DOCS members (oversized eval buckets are degenerate
+    boilerplate; capping them bounds the per-corpus-row fanout —
+    connectivity does not matter here because any single surviving hit
+    already drops the doc)."""
+    hits = _band_hits(
+        _minhash_bands(corpus), F.broadcast(eval_bands),
+        jaccard_threshold, "doc_id",
     )
     return corpus.select("doc_id").join(hits, "doc_id", "left_anti")
 
 
-def eval_band_table(
-    eval_docs: "DataFrame", max_eval_bucket: int = LSH_MAX_BUCKET_DOCS
-) -> "DataFrame":
-    """The broadcastable eval-side artifact of decontaminate_fuzzy_batch:
-    banded MinHash signatures of the eval set with degenerate
-    (boilerplate) buckets capped. Split out so a fixed eval set is
-    signed ONCE for many corpus batches."""
-    eb = _minhash_bands(eval_docs).select(
-        F.col("bucket"), F.col("sig").alias("esig")
-    )
+def eval_band_table(eval_docs: "DataFrame") -> "DataFrame":
+    """The broadcastable eval-side band table (eval_id, esig, bucket)
+    of fuzzy decontamination and the contamination audit: banded
+    MinHash signatures of the eval set with degenerate (boilerplate)
+    buckets of more than LSH_MAX_BUCKET_DOCS eval docs dropped — the
+    only place the eval-side cap is applied. Split out so a fixed eval
+    set is signed ONCE for many corpus batches."""
     w = Window.partitionBy("bucket")
     return (
-        eb.withColumn("bsize", F.count("*").over(w))
-        .filter(F.col("bsize") <= max_eval_bucket)
+        _minhash_bands(eval_docs)
+        .select(
+            F.col("doc_id").alias("eval_id"), F.col("sig").alias("esig"),
+            "bucket",
+        )
+        .withColumn("bsize", F.count("*").over(w))
+        .filter(F.col("bsize") <= LSH_MAX_BUCKET_DOCS)
         .drop("bsize")
     )
 
@@ -2652,7 +2634,9 @@ def decontaminate_fuzzy(
     docs = _docs(spark, sf_dir)
     ev = docs.filter(F.col("doc_id") % eval_mod == 0)
     corpus = docs.filter(F.col("doc_id") % eval_mod != 0)
-    return decontaminate_fuzzy_batch(corpus, ev, jaccard_threshold)
+    return decontaminate_fuzzy_batch(
+        corpus, eval_band_table(ev), jaccard_threshold
+    )
 
 
 # ------------------------------------------ cross-document boilerplate
@@ -2759,7 +2743,6 @@ def contamination_report(
     n: int = 13,
     jaccard_threshold: float = 0.5,
     eval_mod: int = 5,
-    max_eval_bucket: int = LSH_MAX_BUCKET_DOCS,
 ) -> "DataFrame":
     """Per-eval-document contamination AUDIT — the table a data team
     reads before shipping an eval suite: for every held-out document
@@ -2793,25 +2776,9 @@ def contamination_report(
         F.count("*").cast("long").alias("n_exact")
     )
 
-    w = Window.partitionBy("bucket")
-    eb = (
-        _minhash_bands(ev)
-        .select(F.col("doc_id").alias("eval_id"), F.col("sig").alias("esig"),
-                "bucket")
-        .withColumn("bsize", F.count("*").over(w))
-        .filter(F.col("bsize") <= max_eval_bucket)
-        .drop("bsize")
-    )
-    fz_pairs = (
-        _minhash_bands(corpus)
-        .join(F.broadcast(eb), "bucket")
-        .select(
-            "eval_id", "doc_id",
-            _est_jaccard(F.col("sig"), F.col("esig")).alias("est"),
-        )
-        .filter(F.col("est") >= jaccard_threshold)
-        .select("eval_id", "doc_id")
-        .distinct()
+    fz_pairs = _band_hits(
+        _minhash_bands(corpus), F.broadcast(eval_band_table(ev)),
+        jaccard_threshold, "eval_id", "doc_id",
     )
     fzc = fz_pairs.groupBy("eval_id").agg(
         F.count("*").cast("long").alias("n_fuzzy")
@@ -2921,7 +2888,7 @@ def dedup_report(
         .cast("long")
         .alias("n_exact_extra"),
     )
-    pairs = lsh_verified_pairs(spark, sf_dir, min_jaccard=min_jaccard)
+    pairs = lsh_verified_pairs(docs, min_jaccard)
     # pairs feed three consumers (count, components, keep-list tail);
     # localCheckpoint materializes the verify chain once
     pairs = pairs.localCheckpoint(eager=False)

@@ -342,56 +342,28 @@ def image_dedup_near(
     df: "DataFrame", max_hamming: int = 3
 ) -> "DataFrame":
     """Near-duplicate image pairs: banded LSH over the 64-bit ahash —
-    the dedup_simhash pattern applied to pixels. Four 16-bit bands: by
-    pigeonhole, hashes differing in ≤ 3 bits ALWAYS share an intact
-    band (the default is exact recall); ≥ 4 differing bits can split
-    one per band and be missed, so a caller raising max_hamming above
-    3 accepts probabilistic recall, same trade the text simhash
-    documents. Band-equality joins propose candidates and an exact
-    popcount(xor) verifies — never an all-pairs comparison. Shuffle
-    keys are (band_idx, band_value): high-cardinality for real image
-    corpora; a pathological constant-band corpus degrades exactly like
-    simhash's documented boilerplate case.
+    the dedup_simhash scorer (analytics._hamming_pairs) applied to
+    pixels. Four 16-bit bands: by pigeonhole, hashes differing in ≤ 3
+    bits ALWAYS share an intact band (the default is exact recall);
+    ≥ 4 differing bits can split one per band and be missed, so a
+    caller raising max_hamming above 3 accepts probabilistic recall,
+    same trade the text simhash documents. Band-equality joins propose
+    candidates and an exact popcount(xor) verifies — never an
+    all-pairs comparison. The bucket self-join carries the shared
+    skew guard: every solid-colour image hashes to 0, so a band bucket
+    of more than LSH_MAX_BUCKET_DOCS images pairs each member with the
+    bucket's min media_id only (O(n) star pairs, not n²/2).
 
     Emits verified pairs (media_id_a < media_id_b, hamming)."""
-    hashes = image_hashes(df)
-    bands = hashes.select(
-        "media_id",
-        "ahash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("ahash"), i * 16).bitwiseAND(
-                        F.lit(0xFFFF)
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("band", "band_val"),
+    from engine.spark.analytics import _hamming_pairs
+
+    hashes = image_hashes(df).select(
+        F.col("media_id").alias("doc_id"), F.col("ahash").alias("hash")
     )
-    a = bands.select(
-        F.col("media_id").alias("media_id_a"),
-        F.col("ahash").alias("ha"),
-        "band",
-        "band_val",
-    )
-    b = bands.select(
-        F.col("media_id").alias("media_id_b"),
-        F.col("ahash").alias("hb"),
-        "band",
-        "band_val",
-    )
-    pairs = (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("media_id_a") < F.col("media_id_b"))
-        .select("media_id_a", "media_id_b", "ha", "hb")
-        .distinct()
-    )
-    ham = F.bit_count(
-        F.col("ha").bitwiseXOR(F.col("hb"))
-    ).alias("hamming")
-    return pairs.select("media_id_a", "media_id_b", ham).filter(
-        F.col("hamming") <= max_hamming
+    return _hamming_pairs(hashes, 64, 16, max_hamming).select(
+        F.col("doc_a").alias("media_id_a"),
+        F.col("doc_b").alias("media_id_b"),
+        "hamming",
     )
 
 

@@ -537,9 +537,7 @@ def _gate_and_pack(
 
 
 def dedup_conversations_near(
-    per_turn: "DataFrame",
-    min_jaccard: float = 0.5,
-    max_bucket_docs: int | None = None,
+    per_turn: "DataFrame", min_jaccard: float = 0.5
 ) -> "DataFrame":
     """Near-duplicate CONVERSATION pairs — the transcript-native
     complement of exact `dedup_conversations` (re-pastes, re-runs with
@@ -557,24 +555,13 @@ def dedup_conversations_near(
 
     Output: (conv_a, conv_b, jaccard) with conv_a < conv_b.
     """
-    from engine.spark.analytics import (
-        LSH_MAX_BUCKET_DOCS,
-        _lsh_verified_pairs_docs,
-    )
+    from engine.spark.analytics import lsh_verified_pairs
 
     docs = per_turn.select(
         F.col("conv_id").alias("doc_id"),
         F.coalesce(F.col("cleaned_text"), F.lit("")).alias("text"),
     )
-    pairs = _lsh_verified_pairs_docs(
-        docs,
-        min_jaccard,
-        0.0,
-        max_bucket_docs
-        if max_bucket_docs is not None
-        else LSH_MAX_BUCKET_DOCS,
-    )
-    return pairs.select(
+    return lsh_verified_pairs(docs, min_jaccard).select(
         F.col("doc_a").alias("conv_a"),
         F.col("doc_b").alias("conv_b"),
         "jaccard",
@@ -582,9 +569,7 @@ def dedup_conversations_near(
 
 
 def dedup_apply_conversations(
-    per_turn: "DataFrame",
-    min_jaccard: float = 0.5,
-    max_bucket_docs: int | None = None,
+    per_turn: "DataFrame", min_jaccard: float = 0.5
 ) -> "DataFrame":
     """Surviving conv_ids after BOTH conversation-dedup arms — the
     transcript analogue of dedup_apply_lsh, the keep-list a training
@@ -607,9 +592,7 @@ def dedup_apply_conversations(
         .filter(~F.col("is_keeper"))
         .select("conv_id")
     )
-    pairs = dedup_conversations_near(
-        per_turn, min_jaccard, max_bucket_docs
-    ).select(
+    pairs = dedup_conversations_near(per_turn, min_jaccard).select(
         F.col("conv_a").alias("doc_a"), F.col("conv_b").alias("doc_b")
     )
     near_drop = (

@@ -380,11 +380,12 @@ def stream_decontaminate(
     contract).
 
     The eval set is FIXED for the stream's lifetime, so its two
-    broadcast artifacts — the distinct 13-gram table and the capped
-    MinHash band table — materialize ONCE before the stream starts
-    (persist + count) and every microbatch joins against the cached
-    frames (r4 ADVICE: the first version re-ran the eval shingle/
-    signature aggregation inside every trigger)."""
+    broadcast artifacts — the distinct 13-gram table and the MinHash
+    band table (eval_band_table, the one place the fixed
+    LSH_MAX_BUCKET_DOCS eval-bucket cap applies) — materialize ONCE
+    before the stream starts (persist + count) and every microbatch
+    joins against the cached frames instead of re-running the eval
+    shingle/signature aggregation inside every trigger."""
     from engine.spark.analytics import (
         decontaminate_batch,
         decontaminate_fuzzy_batch,
@@ -407,9 +408,7 @@ def stream_decontaminate(
         exact = decontaminate_batch(
             batch_df, eval_docs, n, eval_grams=ev_grams
         )
-        fuzzy = decontaminate_fuzzy_batch(
-            batch_df, eval_docs, jaccard_threshold, eval_bands=ev_bands
-        )
+        fuzzy = decontaminate_fuzzy_batch(batch_df, ev_bands, jaccard_threshold)
         keep = exact.join(fuzzy, "doc_id")
         batch_df.join(keep, "doc_id", "left_semi").write.mode(
             "overwrite"

@@ -80,7 +80,7 @@ def main(argv: list[str] | None = None) -> int:
         ev = A._docs(spark, args.eval_input)
         exact = A.decontaminate_batch(corpus, ev)
         fuzzy = A.decontaminate_fuzzy_batch(
-            corpus, ev, jaccard_threshold=args.min_jaccard
+            corpus, A.eval_band_table(ev), jaccard_threshold=args.min_jaccard
         )
         out = exact.join(fuzzy, "doc_id")
         table = "decontaminated"

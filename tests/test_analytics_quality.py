@@ -361,11 +361,17 @@ def test_lsh_verified_matches_bounded_jaccard(spark, planted_dir):
     every band here — the expected ~0.6% miss rate at that similarity
     (P[miss] = (1 - 0.829^4)^8), measured honestly rather than
     asserted away."""
-    from engine.spark.analytics import dedup_ngram_jaccard, lsh_verified_pairs
+    from engine.spark.analytics import (
+        _docs,
+        dedup_ngram_jaccard,
+        lsh_verified_pairs,
+    )
 
     lsh = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in lsh_verified_pairs(spark, planted_dir, min_jaccard=0.5).collect()
+        for r in lsh_verified_pairs(
+            _docs(spark, planted_dir), min_jaccard=0.5
+        ).collect()
     }
     allpairs = {
         (r.doc_a, r.doc_b): r.jaccard
@@ -403,11 +409,13 @@ def boilerplate_dir(spark, tmp_path_factory):
     return out
 
 
-def test_lsh_skew_guard_bounds_pairs(spark, boilerplate_dir):
+def test_lsh_skew_guard_bounds_pairs(spark, boilerplate_dir, monkeypatch):
     """Band-bucket skew evidence (measured, not claimed): with the
     hub-star guard the 150-doc boilerplate bucket emits O(n) pairs; an
-    unguarded run emits the full O(n^2). Connectivity is preserved —
-    the star still joins all 150 docs into one component."""
+    unguarded run (cap raised past the bucket size) emits the full
+    O(n^2). Connectivity is preserved — the star still joins all 150
+    docs into one component."""
+    from engine.spark import analytics
     from engine.spark.analytics import dedup_clusters, dedup_minhash_lsh
 
     guarded = dedup_minhash_lsh(spark, boilerplate_dir).collect()
@@ -415,9 +423,8 @@ def test_lsh_skew_guard_bounds_pairs(spark, boilerplate_dir):
     assert len(boiler_pairs) == 149, len(boiler_pairs)  # star, not n^2/2
     assert all(r.est_jaccard == 1.0 and r.doc_a == 0 for r in boiler_pairs)
 
-    unguarded = dedup_minhash_lsh(
-        spark, boilerplate_dir, max_bucket_docs=10**9
-    ).count()
+    monkeypatch.setattr(analytics, "LSH_MAX_BUCKET_DOCS", 10**9)
+    unguarded = dedup_minhash_lsh(spark, boilerplate_dir).count()
     assert unguarded >= 150 * 149 // 2  # the quadratic blowup the guard stops
 
     pairs = spark.createDataFrame(
@@ -520,6 +527,45 @@ def test_dedup_clusters_raises_when_round_cap_exhausted(spark, monkeypatch):
     )
     with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
         analytics.dedup_clusters(pairs)
+
+
+def test_eval_bucket_cap_bounds_fuzzy_hits(spark, boilerplate_dir, monkeypatch):
+    """The eval-side band cap (eval_band_table) on the boilerplate
+    fixture: eval_mod=5 makes 30 identical boilerplate eval docs, so
+    every boilerplate band bucket holds 30 eval docs. At the default cap
+    of 64 they all match and drop the 120 boilerplate corpus copies;
+    with the cap below 30 those buckets are degenerate and dropped, so
+    the fuzzy arm finds nothing while the exact arm still does."""
+    from engine.spark import analytics
+    from engine.spark.analytics import contamination_report, decontaminate_fuzzy
+
+    boiler_eval = set(range(0, 150, 5))
+
+    def boiler_kept():
+        return {
+            r.doc_id
+            for r in decontaminate_fuzzy(spark, boilerplate_dir).collect()
+            if r.doc_id < 500
+        }
+
+    def boiler_report():
+        return {
+            r.eval_id: (r.n_exact, r.n_fuzzy)
+            for r in contamination_report(spark, boilerplate_dir).collect()
+            if r.eval_id < 500
+        }
+
+    assert analytics.LSH_MAX_BUCKET_DOCS == 64
+    assert boiler_kept() == set()
+    report = boiler_report()
+    assert set(report) == boiler_eval
+    assert all(n_fuzzy == 120 for _, n_fuzzy in report.values())
+
+    monkeypatch.setattr(analytics, "LSH_MAX_BUCKET_DOCS", 16)
+    assert boiler_kept() == set(range(150)) - boiler_eval
+    report = boiler_report()
+    assert set(report) == boiler_eval
+    assert all(n_exact > 0 and n_fuzzy == 0 for n_exact, n_fuzzy in report.values())
 
 
 def test_corpus_prepare_filters_dedups_and_packs(spark, boilerplate_dir):
@@ -1348,6 +1394,7 @@ def test_decontaminate_fuzzy_batch_planted(spark):
         decontaminate_batch,
         decontaminate_fuzzy,
         decontaminate_fuzzy_batch,
+        eval_band_table,
     )
 
     base = [f"word{i}" for i in range(100)]
@@ -1369,7 +1416,8 @@ def test_decontaminate_fuzzy_batch_planted(spark):
         "doc_id long, text string",
     )
     kept = sorted(
-        r.doc_id for r in decontaminate_fuzzy_batch(corpus, ev).collect()
+        r.doc_id
+        for r in decontaminate_fuzzy_batch(corpus, eval_band_table(ev)).collect()
     )
     assert kept == [2, 3]
     # the edit broke every 13-gram, so the EXACT arm keeps doc 1

@@ -189,9 +189,10 @@ def test_oracle_keys_subset_of_queries():
 
 def test_rows_only_queries_run(spark):
     """Queries intentionally without an oracle still must execute and
-    return a stable schema at small scale."""
+    return a stable schema at small scale — every query the oracle map
+    does not cover, so the set keeps up as oracles come and go."""
     qs = entry_mod.queries()
-    for name in ("dedup_minhash_lsh", "dedup_simhash"):
+    for name in sorted(set(qs) - set(entry_mod.oracle_sql())):
         df = qs[name](spark, "/root/testdata/sf0.001")
         assert df.count() >= 0
         assert df.columns

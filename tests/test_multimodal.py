@@ -146,7 +146,10 @@ def test_image_dedup_near_real_pixels(spark):
     """Perceptual image dedup over REAL decoded pixels: an exact copy
     and a uniformly brightened copy hash identically (hamming 0), a
     few-pixel edit lands within the banded-LSH guarantee (hamming ≤ 3
-    always recalled), and an unrelated image pairs with nothing."""
+    always recalled), and an unrelated image pairs with nothing. 80
+    solid images (different grey levels, all ahash 0) share one bucket
+    in every band: the skew guard pairs them as a 79-pair star around
+    the min id instead of 80·79/2 all-pairs."""
     import datetime as dt
 
     from engine.kernel.png import encode_png
@@ -165,11 +168,13 @@ def test_image_dedup_near_real_pixels(spark):
         for y in range(h)
         for x in range(w)
     )
+    solids = {100 + i: bytes([3 * i]) * (w * h) for i in range(80)}
     ts = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+    images = dict(enumerate((base, bytes(base), bright, edited, unrelated)))
     rows = [
         (i, "image", bytearray(encode_png(w, h, bytes(px), channels=1)),
          "s", ts)
-        for i, px in enumerate((base, bytes(base), bright, edited, unrelated))
+        for i, px in {**images, **solids}.items()
     ] + [(99, "audio", bytearray(b"AUD1" + b"\x00" * 16), "s", ts)]
     media = spark.createDataFrame(
         rows,
@@ -177,8 +182,9 @@ def test_image_dedup_near_real_pixels(spark):
         "ts timestamp",
     )
     hs = {r.media_id: r.ahash for r in image_hashes(media).collect()}
-    assert set(hs) == {0, 1, 2, 3, 4}  # audio row never hashed
+    assert set(hs) == set(images) | set(solids)  # audio row never hashed
     assert hs[0] == hs[1] == hs[2]  # copy + uniform brightness
+    assert all(hs[i] == 0 for i in solids)  # blank: no pixel above mean
 
     def ham(a, b):  # signed int64 view -> raw 64-bit pattern popcount
         return bin((a ^ b) & ((1 << 64) - 1)).count("1")
@@ -193,6 +199,9 @@ def test_image_dedup_near_real_pixels(spark):
     assert pairs[(0, 1)] == 0 and pairs[(0, 2)] == 0 and pairs[(1, 2)] == 0
     assert (0, 3) in pairs and pairs[(0, 3)] <= 3
     assert not any(4 in p for p in pairs)  # unrelated never pairs
+    blank = {p: d for p, d in pairs.items() if p[1] in solids}
+    assert len(blank) == 79, len(blank)  # star around the hub, not 3,160
+    assert all(a == min(solids) and d == 0 for (a, _), d in blank.items())
 
 
 def test_real_png_resize_roundtrip(spark):

@@ -262,6 +262,7 @@ def test_stream_decontaminate_matches_batch(spark, tmp_path_factory):
     from engine.spark.analytics import (
         decontaminate_batch,
         decontaminate_fuzzy_batch,
+        eval_band_table,
     )
     from engine.spark.streaming import stream_decontaminate
 
@@ -305,7 +306,7 @@ def test_stream_decontaminate_matches_batch(spark, tmp_path_factory):
     # equivalence with the batch path over the full corpus
     allrows = spark.createDataFrame(rows1 + rows2, schema).drop("ts")
     exact = decontaminate_batch(allrows, ev)
-    fuzzy = decontaminate_fuzzy_batch(allrows, ev)
+    fuzzy = decontaminate_fuzzy_batch(allrows, eval_band_table(ev))
     batch_keep = {r.doc_id for r in exact.join(fuzzy, "doc_id").collect()}
     assert streamed == batch_keep
 
